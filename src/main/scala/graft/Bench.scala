@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.synth.SynthWorld
 import graft.web.Flagship
@@ -28,14 +28,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -128,7 +121,7 @@ object Bench {
       time(consume(Flagship.geocodePages(spark, spark.read.parquet(fDir), fCfg)))
     }.min
     results += ("flagship_geocode_2m_pages" -> tFlag)
-    System.err.println(f"[bench] flagship: ${flagshipPages / tFlag}%.0f pages geocoded+tiled/s at local[$cpus] (min of 5)")
+    System.err.println(f"[bench] flagship: ${flagshipPages / tFlag}%.0f pages geocoded+tiled/s at ${spark.sparkContext.master} (min of 5)")
 
     // per-query status: a crashing query must surface as err, not as a
     // flattering near-zero timing

@@ -1,45 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.web.Flagship
 
 /** Two-parallelism scaling evidence (north rule: ≥0.8 throughput scaling
   * efficiency from N to 4N executors; BASELINE.md evidences it in-sandbox
   * as the same job at two pinned parallelism levels on identical input).
   *
-  * Single-config mode (the official path, driven by tools/scaling.sh which
-  * pins each JVM with `taskset` so a local[N] run cannot borrow idle host
-  * cores for GC/JIT — the honest stand-in for separate executors):
   *   runMain graft.ScalingBench <cores> <pages>
   * prints one JSON line {"cores":..,"pages":..,"seconds":..,"pps":..}.
-  *
-  * No-arg mode runs 8 and 32 unpinned in one JVM and writes
-  * BENCH/BASELINE.md directly (fallback, noisier).
+  * tools/scaling.sh drives it once per parallelism level, pinning each
+  * JVM with `taskset` so a local[N] run cannot borrow idle host cores for
+  * GC/JIT — the honest stand-in for separate executors.
   */
 object ScalingBench {
 
   case class Run(cores: Int, pages: Long, seconds: Double) {
     def pagesPerSec: Double = pages / seconds
-    def perCore: Double = pagesPerSec / cores
   }
 
   /** Warmup + min-of-5 timed geocode runs over pre-materialized parquet
     * (generation and page-cache warming stay outside the timed region;
     * min damps host-VM steal-time noise). */
   def runAt(cores: Int, pages: Long): Run = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      // feed every core: default 128 MB splits would give the 2-3 GB bench
-      // input fewer read partitions than cores (SURVEY.md §4: size
-      // maxPartitionBytes so partitions ≥ 2-4× cores)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(sys.env.updated(Session.CpusVar, cores.toString))
+    // feed every core: default 128 MB splits would give the 2-3 GB bench
+    // input fewer read partitions than cores (SURVEY.md §4: size
+    // maxPartitionBytes so partitions ≥ 2-4× cores)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
     val cfg = Bench.benchCfg(pages)
     val dir = Flagship.materializePages(spark, cfg)
     def once(): Double = {
@@ -54,16 +41,8 @@ object ScalingBench {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.length >= 2) {
-      val r = runAt(args(0).toInt, args(1).toLong)
-      println(s"""{"cores":${r.cores},"pages":${r.pages},"seconds":${r.seconds},"pps":${r.pagesPerSec}}""")
-    } else {
-      val pages = 16000000L
-      val lo = runAt(8, pages)
-      val hi = runAt(32, pages)
-      val eff = hi.perCore / lo.perCore
-      println(f"local[8]: ${lo.pagesPerSec}%.0f pages/s; local[32]: ${hi.pagesPerSec}%.0f pages/s; efficiency $eff%.3f")
-      println(s"""{"p8":${lo.pagesPerSec},"p32":${hi.pagesPerSec},"efficiency":$eff}""")
-    }
+    require(args.length == 2, "usage: ScalingBench <cores> <pages>")
+    val r = runAt(args(0).toInt, args(1).toLong)
+    println(s"""{"cores":${r.cores},"pages":${r.pages},"seconds":${r.seconds},"pps":${r.pagesPerSec}}""")
   }
 }

@@ -292,13 +292,7 @@ object StressBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     val rs = run(spark)
     val js = rs.map { case (k, (a, b)) =>
       s""""$k":{"t_base":$a,"t_10x":$b,"ratio":${b / a}}"""

@@ -57,6 +57,18 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("QueryProfile.profile writes a plan per query, records jobs and leaves the session running") {
+    val out = java.nio.file.Files.createTempDirectory("graft-qprof")
+    val names = Seq("q01_union_project", "entry")
+    val jobs = graft.tools.QueryProfile.profile(spark, sf, out.toString, names)
+    for (n <- names) {
+      assert(java.nio.file.Files.readString(out.resolve(s"$n.txt")).contains("== Physical Plan =="), n)
+      assert(jobs(n) >= 1, n)
+    }
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3)
+  }
+
   test("exact dedup partitions the corpus") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").count()
     val dedup = SparkEntry.queries("q20_exact_dedup")(spark, sf)
